@@ -1,8 +1,8 @@
 """Engine configuration.
 
 Mirrors the reference ``Config`` dataclass (osm_waterway_extractor.py:100-237,
-config.yaml) plus graft-specific knobs (tiling resolutions, checkpointing,
-skew handling). Explicit and serializable: the SHA-256 of the per-stage
+config.yaml) plus graft-specific knobs (tiling resolutions, skew
+handling). Explicit and serializable: the SHA-256 of the per-stage
 parameter subset keys checkpoint paths, reproducing the reference's
 step-parameter-hash cache invalidation (osm_waterway_extractor.py:239-334,
 3038-3055).
@@ -13,8 +13,7 @@ from __future__ import annotations
 import dataclasses
 import hashlib
 import json
-from dataclasses import dataclass, field
-from typing import Optional
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -46,14 +45,7 @@ class EngineConfig:
     # candidate fan-out of the intersection self-join. Output-invariant —
     # deliberately NOT part of any step-param hash.
     intersect_cell_cap: int = 512
-    # local-first assembly (assemble_local.py) avoids the ref⋈node shuffle
-    # for doc-local ways but pays Python-side span parsing; the JVM from_json
-    # + sort-based reassembly wins in this environment → off by default
-    local_first_assembly: bool = False
     shuffle_partitions: int = 32
-    assemble_chunk_size: int = 4096   # two-level mega-way reassembly (J1 skew)
-    salt_buckets: int = 8             # explicit salting for hot node ids
-    arrow_batch_size: int = 2048      # fat geometry rows per Arrow batch
 
     # QA sampling (reference config.yaml:145): edges re-measured with the
     # full-precision geodesic kernel post-build; 0 disables
@@ -66,104 +58,50 @@ class EngineConfig:
     min_width_parse_success_rate: float = 0.7  # fraction, 0..1
     max_crossing_edges_pct: float = 1.0  # % of edges, 0..100
 
-    # graft: checkpoint/resume (SURVEY.md §2.8, S9)
-    checkpoint_dir: Optional[str] = None
-    resume: bool = True
-
     # ---- step-parameter subsets (reference :249-327): changing a late-stage
-    # knob must not invalidate early-stage checkpoints.
+    # knob must not invalidate early-stage checkpoints. Each checkpointed
+    # stage declares (upstream stage, the knobs it reads itself); its hash
+    # covers those knobs plus everything upstream, so no stage can miss a
+    # knob an earlier stage's output depends on.
     _STEP_PARAMS = {
-        # parse_osm rounds coordinates only; the waterway-type filter applies
-        # AFTER the checkpoint (ways_from_parsed), so changing the type list
-        # correctly does not invalidate the parsed cache.
-        # local_first_assembly IS included: the two branches checkpoint
-        # different schemas under this stage (parse_osm union schema vs
-        # parse_nodes node-only), so toggling it must not reuse the other
-        # mode's checkpoint
-        "parsed": ("coordinate_precision", "local_first_assembly"),
-        "assembled": (
-            "waterway_types",
-            "filter_waterway_types",
-            "coordinate_precision",
-            "local_first_assembly",
-        ),
-        "processed": ("coordinate_precision",),
+        # parse_osm rounds coordinates only
+        "parsed": (None, ("coordinate_precision",)),
+        # ways_from_parsed filters on the waterway type before the fused
+        # assembly + clean + simplify pass
         "simplified": (
-            "coordinate_precision",
-            "enable_geometry_simplification",
-            "simplification_tolerance_m",
+            "parsed",
+            (
+                "waterway_types",
+                "filter_waterway_types",
+                "enable_geometry_simplification",
+                "simplification_tolerance_m",
+            ),
         ),
-        "intersections": (
-            "coordinate_precision",
-            "enable_geometry_simplification",
-            "simplification_tolerance_m",
-            "enable_intersection_detection",
-            "snap_tolerance_m",
-        ),
-        "endpoints": (
-            "coordinate_precision",
-            "enable_geometry_simplification",
-            "simplification_tolerance_m",
-            "enable_intersection_detection",
-            "snap_tolerance_m",
-        ),
-        "clustering": (
-            "coordinate_precision",
-            "enable_geometry_simplification",
-            "simplification_tolerance_m",
-            "enable_intersection_detection",
-            "snap_tolerance_m",
-            "max_displacement_multiplier",
-        ),
-        "edges": (
-            "coordinate_precision",
-            "enable_geometry_simplification",
-            "simplification_tolerance_m",
-            "enable_intersection_detection",
-            "snap_tolerance_m",
-            "max_displacement_multiplier",
-            "min_fragment_length_m",
-            "hash_length",
-        ),
-        "nodes": (
-            "coordinate_precision",
-            "enable_geometry_simplification",
-            "simplification_tolerance_m",
-            "enable_intersection_detection",
-            "snap_tolerance_m",
-            "max_displacement_multiplier",
-            "hash_length",
-        ),
-        "tiles": ("tile_resolutions",),
-        "nodes_tiled": (
-            "coordinate_precision",
-            "enable_geometry_simplification",
-            "simplification_tolerance_m",
-            "enable_intersection_detection",
-            "snap_tolerance_m",
-            "max_displacement_multiplier",
-            "hash_length",
-            "tile_resolutions",
-        ),
-        "edges_tiled": (
-            "coordinate_precision",
-            "enable_geometry_simplification",
-            "simplification_tolerance_m",
-            "enable_intersection_detection",
-            "snap_tolerance_m",
-            "max_displacement_multiplier",
-            "min_fragment_length_m",
-            "hash_length",
-            "tile_resolutions",
-        ),
+        "intersections": ("simplified", ("enable_intersection_detection", "snap_tolerance_m")),
+        "clustering_domain": ("intersections", ()),
+        "clustering": ("clustering_domain", ("snap_tolerance_m", "max_displacement_multiplier")),
+        "edges": ("clustering", ("min_fragment_length_m", "hash_length")),
+        "nodes": ("clustering", ("hash_length",)),
+        "nodes_tiled": ("nodes", ("tile_resolutions",)),
+        "edges_tiled": ("edges", ("tile_resolutions",)),
+        "tiles": ("edges_tiled", ("tile_resolutions",)),
     }
+
+    def step_params(self, step: str) -> tuple[str, ...]:
+        """Sorted knobs a pipeline step's output depends on: its own plus
+        its upstream's. A step without a declaration depends on every
+        field."""
+        if step not in self._STEP_PARAMS:
+            return tuple(sorted(f.name for f in dataclasses.fields(self)))
+        keys: set[str] = set()
+        while step is not None:
+            step, own = self._STEP_PARAMS[step]
+            keys.update(own)
+        return tuple(sorted(keys))
 
     def step_param_hash(self, step: str) -> str:
         """16-hex param hash for a pipeline step (reference :245-334)."""
-        keys = self._STEP_PARAMS.get(step)
-        if keys is None:
-            keys = tuple(sorted(f.name for f in dataclasses.fields(self)))
-        payload = {k: getattr(self, k) for k in keys}
+        payload = {k: getattr(self, k) for k in self.step_params(step)}
         blob = json.dumps(payload, sort_keys=True, default=list)
         return hashlib.sha256(blob.encode()).hexdigest()[:16]
 

@@ -208,9 +208,6 @@ def snap_map(
     and ``connected_components`` (min-label propagation) remain as
     independent cross-check implementations for the parity tests.
     """
-    import os
-    import time
-
     if max_abs_lat is None:
         max_abs_lat = points.agg(F.max(F.abs(F.col("lat")))).collect()[0][0]
     identity = points.select(
@@ -218,18 +215,12 @@ def snap_map(
     )
     if max_abs_lat is None:  # empty input
         return identity
-    t0 = time.time()
     mapping = _snap_map_blocks(points, config, float(max_abs_lat)).localCheckpoint(
         eager=True
     )
-    if os.environ.get("OSMWWE_STAGE_TIMING"):
-        print(f"[snap] block kernel+checkpoint: {time.time() - t0:.2f}s", flush=True)
-    t0 = time.time()
     if mapping.where(F.col("viol") == 1).limit(1).count() > 0:
         # reference :1314-1317 — hard abort on displacement violations
         raise ValueError("Cluster displacement exceeds safety threshold")
-    if os.environ.get("OSMWWE_STAGE_TIMING"):
-        print(f"[snap] violation probe: {time.time() - t0:.2f}s", flush=True)
     return points.join(mapping.drop("viol"), ["lat", "lon"], "left").select(
         "lat",
         "lon",
@@ -281,22 +272,12 @@ def _snap_map_blocks(
         .groupBy("block")
         .agg(F.sum("cnt").alias("nbh_cnt"))
     )
-    import os
-    import time
-
-    t0 = time.time()
     hot_blocks = (
         nbh.where(F.col("nbh_cnt") >= 2)
         .select(F.col("block").alias("home"))
         .localCheckpoint(eager=True)  # tiny; reused by the count + the join
     )
-    n_hot = hot_blocks.count()
-    if os.environ.get("OSMWWE_STAGE_TIMING"):
-        print(
-            f"[snap] hot-block prune: {time.time() - t0:.2f}s ({n_hot} hot blocks)",
-            flush=True,
-        )
-    if n_hot <= HOT_BLOCK_BROADCAST_MAX:
+    if hot_blocks.count() <= HOT_BLOCK_BROADCAST_MAX:
         hot_blocks = F.broadcast(hot_blocks)
     hot = home_pts.join(hot_blocks, "home", "leftsemi").drop("home")
 

@@ -18,8 +18,6 @@
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -323,7 +321,7 @@ def _covered_for_join(ways: DataFrame, config: EngineConfig) -> DataFrame:
     whole scan+explode lineage runs AGAIN (measured round 5: a duplicate
     52-CPU-s build at 100k docs, the single biggest avoidable cost of the
     intersections stage). The pipeline therefore materializes this table
-    once per stage (WaterwayEngine._covered_stage) and passes it to both
+    once as its ``covered`` stage and passes it to both
     operators via their ``covered=`` parameter; plan-level reuse remains
     the fallback for standalone calls."""
     return _covered_resplit(_covered_raw(ways), config)
@@ -426,9 +424,7 @@ def detect_intersections(
     # keeps every method small. The huge target never reduces parallelism
     # (coalesce only ever lowers a partition count). Pinned by
     # tests/test_round5_hardening.py::test_intersections_compile_without_fallback.
-    # OSMWWE_CODEGEN_BARRIER=0 disables it (diagnostic A/B only).
-    if os.environ.get("OSMWWE_CODEGEN_BARRIER", "1") != "0":
-        pairs = pairs.coalesce(1 << 20)
+    pairs = pairs.coalesce(1 << 20)
 
     # exact test JVM-side (whole-stage codegen) — bit-identical twin of the
     # NumPy segment_intersections kernel, which remains the oracle/test path.

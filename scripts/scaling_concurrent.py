@@ -130,8 +130,7 @@ def run_leg(cpus: int, cpuset: str, n_docs: int, out: dict) -> None:
     out["stages"] = {
         m.group(1).strip(): float(m.group(2))
         for ln in p.stdout.splitlines()
-        if ln.startswith(("[stage]", "[snap]"))
-        and (m := re.match(r"\[(?:stage|snap)\] ([^:]+): ([0-9.]+)s", ln))
+        if (m := re.match(r"\[stage\] ([^:]+): ([0-9.]+)s", ln))
     }
 
 

@@ -392,8 +392,7 @@ def one_level(cpus: int, n_docs: int, cpuset: str | None = None, sel: dict | Non
     r["stages"] = {
         m.group(1).strip(): float(m.group(2))
         for ln in out.stdout.splitlines()
-        if ln.startswith(("[stage]", "[snap]", "[gap]"))
-        and (m := re.match(r"\[(?:stage|snap|gap)\] ([^:]+): ([0-9.]+)s", ln))
+        if (m := re.match(r"\[stage\] ([^:]+): ([0-9.]+)s", ln))
     }
     for name, sec in r["stages"].items():
         print(f"    [leg cpus={cpus}] {name}: {sec:.2f}s", flush=True)

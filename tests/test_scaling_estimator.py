@@ -92,9 +92,11 @@ def test_other_level_pairs_respect_factor():
     assert est["eff"] == pytest.approx(0.9)
 
 
-def test_spread_cpuset_never_compact_never_cpu0():
+def test_spread_cpuset_never_compact_never_cpu0(monkeypatch):
     # spread pinning: stride 32/k starting at cpu1 — adjacent vCPUs share a
-    # memory path on this VM and cpu0 hosts IRQ/system load (host_probe.py)
+    # memory path on a 32-vCPU VM and cpu0 hosts IRQ/system load
+    # (host_probe.py); pinned to 32 vCPUs so the expectation holds on any host
+    monkeypatch.setattr(scaling_evidence, "_N_CPUS", 32)
     assert scaling_evidence.spread_cpuset(1) == "1"
     assert scaling_evidence.spread_cpuset(4) == "1,9,17,25"
     cpus = [int(c) for c in scaling_evidence.spread_cpuset(8).split(",")]
@@ -102,3 +104,12 @@ def test_spread_cpuset_never_compact_never_cpu0():
     assert len(set(cpus)) == 8
     # uniform stride — no two pins adjacent
     assert min(b - a for a, b in zip(cpus, cpus[1:])) >= 2
+
+
+def test_spread_cpuset_on_a_small_host(monkeypatch):
+    monkeypatch.setattr(scaling_evidence, "_N_CPUS", 4)
+    for k in (1, 2, 3):
+        cpus = [int(c) for c in scaling_evidence.spread_cpuset(k).split(",")]
+        assert 0 not in cpus and len(set(cpus)) == k
+    assert scaling_evidence.spread_cpuset(4) == "0-3"
+    assert scaling_evidence.spread_cpuset(8) == "0-3"

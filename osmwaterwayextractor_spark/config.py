@@ -31,7 +31,6 @@ class EngineConfig:
     # clustering (config.yaml:50-72)
     max_displacement_multiplier: float = 3.0
     warning_displacement_multiplier: float = 2.0
-    max_cluster_size_warning: int = 10
 
     # ids (config.yaml:74-103)
     hash_length: int = 8
@@ -127,11 +126,7 @@ class EngineConfig:
                 kw[k] = proc[k]
         if "waterway_types" in proc:
             kw["waterway_types"] = tuple(proc["waterway_types"])
-        for k in (
-            "max_displacement_multiplier",
-            "warning_displacement_multiplier",
-            "max_cluster_size_warning",
-        ):
+        for k in ("max_displacement_multiplier", "warning_displacement_multiplier"):
             if k in clus:
                 kw[k] = clus[k]
         if "hash_length" in ids:
@@ -149,8 +144,6 @@ class EngineConfig:
                 kw[k] = thr[k]
         return cls(**kw)
 
-
-DEFAULT_CONFIG = EngineConfig()
 
 # reference test_config_no_simplify.yaml semantics (SURVEY.md §5)
 NO_SIMPLIFY_CONFIG = EngineConfig(

@@ -119,29 +119,28 @@ def join_grid_level(radius_m: float, max_abs_lat_deg: float) -> int:
 
 
 def polyline_coverings(
-    lat_arrays: list, lon_arrays: list, level: int
-) -> list[np.ndarray]:
+    lats: np.ndarray, lons: np.ndarray, offsets: np.ndarray, level: int
+) -> tuple[np.ndarray, np.ndarray]:
     """Per-polyline sorted distinct covering cells (bit-identical to the
     Catalyst ``edge_covering_col`` expression: every level-``level`` cell
     each segment's bbox overlaps, no wrap/clip, array_sort(array_distinct)).
 
+    Polylines come flat — line ``i`` is ``lats/lons[offsets[i]:offsets[i+1]]``
+    — and the cells leave flat the same way: ``(cells, cell_offsets)``.
     Fully vectorized across ALL segments of the batch — one offsets trick
-    generates every (segment, cell) pair without a per-segment loop; the
-    only Python-level loop is the final np.split into per-line arrays. The
+    generates every (segment, cell) pair without a per-segment loop. The
     interpreted nested-HOF Catalyst expression costs 100-400 µs/edge on
     real kilometric edges (round-3 measurement: it WAS the pipeline tail,
     130-385 s at 1M edges); this kernel replaces it on the pipeline path.
     """
-    n_lines = len(lat_arrays)
-    if n_lines == 0:
-        return []
+    offsets = np.asarray(offsets, dtype=np.int64)
+    n_lines = offsets.shape[0] - 1
     w = cell_width_deg(level)
-    nv = np.fromiter((len(a) for a in lat_arrays), dtype=np.int64, count=n_lines)
-    flat_la = np.concatenate([np.asarray(a, dtype=np.float64) for a in lat_arrays])
-    flat_lo = np.concatenate([np.asarray(a, dtype=np.float64) for a in lon_arrays])
-    ends = np.cumsum(nv)
+    nv = np.diff(offsets)
+    flat_la = np.asarray(lats, dtype=np.float64)
+    flat_lo = np.asarray(lons, dtype=np.float64)
     seg_mask = np.ones(flat_la.shape[0], dtype=bool)
-    seg_mask[ends - 1] = False  # last vertex of each line starts no segment
+    seg_mask[offsets[1:][nv > 0] - 1] = False  # last vertex of a line starts no segment
     i1 = np.nonzero(seg_mask)[0]
     i2 = i1 + 1
     line_of_seg = np.repeat(np.arange(n_lines), np.maximum(nv - 1, 0))
@@ -153,8 +152,6 @@ def polyline_coverings(
     ys = y1 - y0 + 1
     nc = (x1 - x0 + 1) * ys
     tot = int(nc.sum())
-    if tot == 0:
-        return [np.empty(0, dtype=np.int64) for _ in range(n_lines)]
     seg_idx = np.repeat(np.arange(nc.shape[0]), nc)
     off = np.arange(tot, dtype=np.int64) - np.repeat(np.cumsum(nc) - nc, nc)
     cx = x0[seg_idx] + off // ys[seg_idx]
@@ -166,9 +163,8 @@ def polyline_coverings(
     l_s, c_s = line[order], cell[order]
     keep = np.ones(tot, dtype=bool)
     keep[1:] = (l_s[1:] != l_s[:-1]) | (c_s[1:] != c_s[:-1])
-    l_k, c_k = l_s[keep], c_s[keep]
-    cuts = np.searchsorted(l_k, np.arange(1, n_lines))
-    return np.split(c_k, cuts)
+    l_k = l_s[keep]
+    return c_s[keep], np.searchsorted(l_k, np.arange(n_lines + 1))
 
 
 def _segments_hit_boxes(

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -182,96 +183,43 @@ def assemble_clean_simplify(
     n_part = max(config.shuffle_partitions, 16)
     ordered = resolved.repartition(n_part, "way_id").sortWithinPartitions("way_id", "pos")
 
+    from ..functions.arrow_lists import list_array, whole_runs
     from .geometry_ops import clean_simplify_concat
 
     def kernel(batches):
-        cur_id = None
-        cur_refs = 0
-        cur_tags = None
-        lat_parts: list[np.ndarray] = []
-        lon_parts: list[np.ndarray] = []
-
-        def process(ids, tags_list, la_list, lo_list):
-            """Complete raw ways → cleaned/simplified output frame. The
-            clean+simplify math runs ONCE over the batch's concatenated
-            vertex arrays (clean_simplify_concat) — the old per-way
-            clean_simplify_arrays loop was 92% of this kernel's wall
-            (round-6 cProfile; guide §4.2 whole-batch vectorization)."""
-            if not ids:
-                return pd.DataFrame(
-                    {
-                        "way_id": pd.Series([], dtype="int64"),
-                        "lats": pd.Series([], dtype=object),
-                        "lons": pd.Series([], dtype=object),
-                        "tags": pd.Series([], dtype=object),
-                    }
-                )
-            la_cat = np.concatenate(la_list)
-            lo_cat = np.concatenate(lo_list)
-            lens = np.fromiter((a.shape[0] for a in la_list), dtype=np.int64)
-            offs = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(lens)])
+        """Batches re-cut to whole ways (a mega-way spans many input
+        batches) → cleaned/simplified ways. The clean+simplify math runs
+        ONCE over each batch's concatenated vertex arrays
+        (clean_simplify_concat) — the old per-way clean_simplify_arrays
+        loop was 92% of this kernel's wall (round-6 cProfile; guide §4.2
+        whole-batch vectorization)."""
+        for batch in whole_runs(batches, "way_id"):
+            wid = batch.column("way_id").to_numpy(zero_copy_only=False)
+            n = wid.shape[0]
+            starts = np.flatnonzero(np.r_[True, wid[1:] != wid[:-1]])
+            lens = np.diff(np.r_[starts, n])
+            # a way with ANY missing ref is dropped whole; a complete way's
+            # run starts at its pos-0 row, which carries the tags
+            whole = lens == batch.column("n_refs").to_numpy(zero_copy_only=False)[starts]
+            if not whole.any():
+                continue
+            vert = np.repeat(whole, lens)
+            offs = np.concatenate([np.zeros(1, dtype=np.int64), np.cumsum(lens[whole])])
             la_out, lo_out, offs_out, way_ok = clean_simplify_concat(
-                la_cat, lo_cat, offs, simplify_on, tol
+                batch.column("lat").to_numpy(zero_copy_only=False)[vert],
+                batch.column("lon").to_numpy(zero_copy_only=False)[vert],
+                offs, simplify_on, tol,
             )
             if not way_ok.any():
-                return process([], [], [], [])
-            cuts = offs_out[1:-1]
-            return pd.DataFrame(
-                {
-                    "way_id": pd.Series(
-                        [i for i, ok in zip(ids, way_ok) if ok], dtype="int64"
-                    ),
-                    "lats": pd.Series(np.split(la_out, cuts), dtype=object),
-                    "lons": pd.Series(np.split(lo_out, cuts), dtype=object),
-                    "tags": pd.Series(
-                        [t for t, ok in zip(tags_list, way_ok) if ok], dtype=object
-                    ),
-                }
+                continue
+            first = starts[whole][way_ok]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(wid[first]), list_array(la_out, offs_out),
+                 list_array(lo_out, offs_out), batch.column("tags").take(first)],
+                names=["way_id", "lats", "lons", "tags"],
             )
 
-        def flush(ids, tags_list, la_list, lo_list):
-            if cur_id is None:
-                return
-            la = np.concatenate(lat_parts) if len(lat_parts) > 1 else lat_parts[0]
-            lo = np.concatenate(lon_parts) if len(lon_parts) > 1 else lon_parts[0]
-            if la.shape[0] != cur_refs:  # partial way (missing refs)
-                return
-            ids.append(cur_id)
-            tags_list.append(cur_tags)
-            la_list.append(la)
-            lo_list.append(lo)
-
-        for pdf in batches:
-            ids, tags_list, la_list, lo_list = [], [], [], []
-            wid = pdf["way_id"].to_numpy()
-            la = pdf["lat"].to_numpy(dtype=np.float64)
-            lo = pdf["lon"].to_numpy(dtype=np.float64)
-            nr = pdf["n_refs"].to_numpy()
-            tg = pdf["tags"]
-            if wid.shape[0] == 0:
-                yield process(ids, tags_list, la_list, lo_list)
-                continue
-            starts = np.concatenate([[0], np.nonzero(wid[1:] != wid[:-1])[0] + 1])
-            ends = np.concatenate([starts[1:], [wid.shape[0]]])
-            for s, e in zip(starts, ends):
-                w = int(wid[s])
-                if w != cur_id:
-                    flush(ids, tags_list, la_list, lo_list)
-                    cur_id, cur_refs = w, int(nr[s])
-                    # the run's first row is the way's pos-0 row (rows are
-                    # contiguous and sorted by pos); a run starting past
-                    # pos 0 is a partial way — tags stay None and flush
-                    # drops it on the completeness check anyway
-                    cur_tags = tg.iloc[int(s)]
-                    lat_parts, lon_parts = [], []
-                lat_parts.append(la[s:e])
-                lon_parts.append(lo[s:e])
-            yield process(ids, tags_list, la_list, lo_list)
-        ids, tags_list, la_list, lo_list = [], [], [], []
-        flush(ids, tags_list, la_list, lo_list)
-        yield process(ids, tags_list, la_list, lo_list)
-
-    return ordered.mapInPandas(
+    return ordered.mapInArrow(
         kernel,
         schema="way_id long, lats array<double>, lons array<double>, "
         "tags map<string,string>",

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -176,9 +177,6 @@ def connected_components(points: DataFrame, edges: DataFrame, checkpoint_every: 
             )
 
 
-DRIVER_CC_MAX_PAIRS = 50_000  # _snap_map_driver cross-check bound (tests)
-
-
 def snap_map(
     points: DataFrame,
     config: EngineConfig,
@@ -293,6 +291,7 @@ def _snap_map_blocks(
         F.explode(_ring_cells_expr("lat", "lon", level)).alias("block"),
     )
 
+    from ..functions.arrow_lists import whole_runs
     from ..functions.clustering import UnionFind, epsilon_pairs
 
     # blocks up to this size take the vectorized all-pairs path; bigger
@@ -315,9 +314,10 @@ def _snap_map_blocks(
             np.int64(level) * np.int64(1 << 52) + (xx << np.int64(X_SHIFT)) + yy
         )
 
-    def _process(pdf: pd.DataFrame) -> pd.DataFrame:
+    def _process(batch: pa.RecordBatch):
         """Rows SORTED by block (one or many whole blocks) → emitted snap
-        rows. Same output as the original per-block loop — the ε-pair set
+        rows, or None when no cluster is emitted. Same output as the
+        original per-block loop — the ε-pair set
         per block is exactly {(i,j): geodesic ≤ tol} and union-find roots
         are order-canonical (min member index) — but candidate pairs for
         small blocks are generated for the WHOLE batch at once (size-grouped
@@ -326,13 +326,10 @@ def _snap_map_blocks(
         The old loop paid ~500 µs of grid-bucket machinery per block at an
         average block size of ~2 (round-6 cProfile: 8,411 blocks, 85% of
         kernel wall in epsilon_pairs/k_ring/cell_id setup; guide §4.2)."""
-        lats = pdf["lat"].to_numpy(dtype=np.float64)
-        lons = pdf["lon"].to_numpy(dtype=np.float64)
-        blocks = pdf["block"].to_numpy(dtype=np.int64)
-        out = {"lat": [], "lon": [], "snap_lat": [], "snap_lon": [], "viol": []}
+        lats, lons, blocks = (
+            batch.column(c).to_numpy(zero_copy_only=False) for c in ("lat", "lon", "block")
+        )
         n = blocks.shape[0]
-        if n == 0:
-            return pd.DataFrame(out)
         bstarts = np.concatenate([[0], np.nonzero(np.diff(blocks))[0] + 1, [n]])
         starts = bstarts[:-1]
         sizes = np.diff(bstarts)
@@ -356,11 +353,11 @@ def _snap_map_blocks(
                 gi_parts.append(bs + li)
                 gj_parts.append(bs + lj)
         if not gi_parts:
-            return pd.DataFrame(out)
+            return None
         pi = np.concatenate(gi_parts)
         pj = np.concatenate(gj_parts)
         if not pi.shape[0]:
-            return pd.DataFrame(out)
+            return None
         # union-find over the involved points only (compact ids); the root
         # of a component is its minimum index either way, so clusters match
         # the per-block formulation exactly
@@ -375,6 +372,7 @@ def _snap_map_blocks(
         slab = labels[order]
         cb = np.concatenate([[0], np.nonzero(np.diff(slab))[0] + 1, [slab.shape[0]]])
         homes = _home_cells_np(lats[iv], lons[iv])  # home of each involved point
+        members, cents, viols = [], [], []
         for s, e in zip(cb[:-1], cb[1:]):
             idx = order[s:e]  # compact ids, ascending ⇒ global order preserved
             if idx.shape[0] < 2:
@@ -389,39 +387,30 @@ def _snap_map_blocks(
             disp = geodesic_m(
                 mlat, mlon, np.full(g.shape[0], cla), np.full(g.shape[0], clo)
             )
-            viol = 1 if float(disp.max()) > r_disp else 0
-            out["lat"].extend(mlat.tolist())
-            out["lon"].extend(mlon.tolist())
-            out["snap_lat"].extend([cla] * g.shape[0])
-            out["snap_lon"].extend([clo] * g.shape[0])
-            out["viol"].extend([viol] * g.shape[0])
-        return pd.DataFrame(out)
+            members.append(g)
+            cents.append((cla, clo))
+            viols.append(float(disp.max()) > r_disp)
+        if not members:
+            return None
+        sizes = [g.shape[0] for g in members]
+        g = np.concatenate(members)
+        cla, clo = np.repeat(np.array(cents), sizes, axis=0).T.copy()
+        return pa.RecordBatch.from_arrays(
+            [pa.array(lats[g]), pa.array(lons[g]), pa.array(cla), pa.array(clo),
+             pa.array(np.repeat(np.array(viols, dtype=np.int32), sizes))],
+            names=["lat", "lon", "snap_lat", "snap_lon", "viol"],
+        )
 
     def kernel(batches):
-        # boundary-aware batch walk (same pattern as the J1 reassembly
-        # kernel): hold back the trailing — possibly incomplete — block of
-        # each Arrow batch and prepend it to the next
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            blocks = pdf["block"].to_numpy()
-            cut = int(np.searchsorted(blocks, blocks[-1], side="left"))
-            carry = pdf.iloc[cut:]
-            if cut:
-                res = _process(pdf.iloc[:cut])
-                if len(res):
-                    yield res
-        if carry is not None and len(carry):
-            res = _process(carry)
-            if len(res):
+        # a block's rows may span input batches: re-cut to whole blocks
+        for batch in whole_runs(batches, "block"):
+            res = _process(batch)
+            if res is not None:
                 yield res
 
     n_part = int(points.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     rep = replicated.repartition(n_part, "block").sortWithinPartitions("block")
-    return rep.mapInPandas(
+    return rep.mapInArrow(
         kernel,
         schema="lat double, lon double, snap_lat double, snap_lon double, viol int",
     )

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -29,16 +30,13 @@ from ..functions.geodesy import geodesic_m
 from ..functions.hashing import edge_ids, node_ids
 from ..functions.width import width_columns
 
-def fids_str(arr: np.ndarray) -> list[str]:
-    return [str(x) for x in arr]
-
-
 EDGES_SCHEMA = (
     "id string, from_node_id string, to_node_id string, length_m double, "
     "lats array<double>, lons array<double>, name string, type string, "
     "width_raw string, width_m double, width_source string, original_way_id long, "
     "covering array<bigint>"
 )
+EDGES_COLUMNS = [c.split()[0] for c in EDGES_SCHEMA.split(", ")]
 
 # Single source of truth for the covering resolution lives in operators.tiles
 # so the fused kernel here and the Catalyst with_edge_covering path can never
@@ -197,117 +195,85 @@ def build_edges(ways: DataFrame, snap: DataFrame, config: EngineConfig) -> DataF
         .join(ways_w.drop("lats", "lons"), "way_id")
     )
 
+    from ..functions.arrow_lists import list_array, list_flat
+    from ..functions.tiling import H3_RES_TO_LEVEL, polyline_coverings
+
+    level = H3_RES_TO_LEVEL[COVERING_H3_RES]
+
     def kernel(batches):
-        for pdf in batches:
-            # pass 1 (per way, cheap): validate, find cut indices, stage the
-            # coordinate arrays. The geodesic runs ONCE over the whole
-            # batch's concatenated consecutive-vertex pairs below — the old
+        for batch in batches:
+            # ways of ≥2 vertices; every vertex flagged a cut is an edge
+            # boundary, and so are both ends of a way
+            la, offs = list_flat(batch.column("lats_m"))
+            lo, _ = list_flat(batch.column("lons_m"))
+            ct, _ = list_flat(batch.column("cuts"))
+            lens = np.diff(offs)
+            rows = np.flatnonzero(lens >= 2)
+            if not rows.size:
+                continue
+            vert = np.repeat(lens >= 2, lens)
+            la, lo, ct = la[vert], lo[vert], ct[vert]
+            lens = lens[rows]
+            ends = np.cumsum(lens)
+            ct[ends - lens] = ct[ends - 1] = True
+            # ONE geodesic over every consecutive pair of the batch — the old
             # per-way call paid ~300 µs of Vincenty iteration machinery per
             # way (round-6 cProfile: 87% of this kernel's wall; guide §4.2).
             # geodesic_m is per-element masked, so batched values are
-            # bit-identical to the per-way slices.
-            way_la, way_lo, way_jidx = [], [], []
-            way_meta = []  # (way_id, name, typ, wraw, wm, wsrc)
-            for way_id, lats, lons, cuts, name, typ, wraw, wm, wsrc in zip(
-                pdf["way_id"], pdf["lats_m"], pdf["lons_m"], pdf["cuts"],
-                pdf["name"], pdf["type"], pdf["width_raw"], pdf["width_m"], pdf["width_source"],
-            ):
-                la = np.asarray(lats, dtype=np.float64)
-                lo = np.asarray(lons, dtype=np.float64)
-                n = la.shape[0]
-                if n < 2:
-                    continue
-                ct = np.asarray(cuts, dtype=bool).copy()
-                ct[0] = ct[-1] = True
-                jidx = np.nonzero(ct)[0]
-                if jidx.shape[0] < 2:
-                    continue
-                way_la.append(la)
-                way_lo.append(lo)
-                way_jidx.append(jidx)
-                way_meta.append((way_id, name, typ, wraw, wm, wsrc))
-
-            f_lat, f_lon, t_lat, t_lon = [], [], [], []
-            wids, ks, lengths = [], [], []
-            seg_lats, seg_lons, meta = [], [], []
-            if way_la:
-                la_cat = np.concatenate(way_la)
-                lo_cat = np.concatenate(way_lo)
-                # one geodesic over every consecutive pair; pairs straddling
-                # a way boundary are never read (a way spanning [o, o+n)
-                # only reads seg_all[o : o+n-1]) — zero them out so a
-                # near-antipodal cross-way pair can't drag the whole batch
-                # through Vincenty's 200-iteration non-convergence path
-                la1, lo1 = la_cat[:-1].copy(), lo_cat[:-1].copy()
-                la2, lo2 = la_cat[1:].copy(), lo_cat[1:].copy()
-                lens = np.fromiter((a.shape[0] for a in way_la), dtype=np.int64)
-                bnd = np.cumsum(lens)[:-1] - 1
-                for arr in (la1, lo1, la2, lo2):
-                    arr[bnd] = 0.0
-                seg_all = geodesic_m(la1, lo1, la2, lo2)
-                off = 0
-                for (way_id, name, typ, wraw, wm, wsrc), la, lo, jidx in zip(
-                    way_meta, way_la, way_lo, way_jidx
-                ):
-                    for k in range(jidx.shape[0] - 1):
-                        s, e = int(jidx[k]), int(jidx[k + 1])
-                        if e <= s:
-                            continue
-                        length = float(np.add.reduce(seg_all[off + s : off + e]))
-                        if length < min_len:
-                            continue
-                        f_lat.append(la[s]); f_lon.append(lo[s])
-                        t_lat.append(la[e]); t_lon.append(lo[e])
-                        wids.append(way_id); ks.append(k); lengths.append(length)
-                        seg_lats.append(la[s : e + 1]); seg_lons.append(lo[s : e + 1])
-                        meta.append((name, typ, wraw, wm, wsrc))
-                    off += la.shape[0]
-            if not wids:
-                yield pd.DataFrame(
-                    {k: [] for k in (
-                        "id", "from_node_id", "to_node_id", "length_m", "lats", "lons",
-                        "name", "type", "width_raw", "width_m", "width_source",
-                        "original_way_id", "covering",
-                    )}
-                )
+            # bit-identical to per-way slices. Pairs straddling a way
+            # boundary are never read — zero them out so a near-antipodal
+            # cross-way pair can't drag the whole batch through Vincenty's
+            # 200-iteration non-convergence path
+            la1, lo1, la2, lo2 = la[:-1].copy(), lo[:-1].copy(), la[1:].copy(), lo[1:].copy()
+            for arr in (la1, lo1, la2, lo2):
+                arr[ends[:-1] - 1] = 0.0
+            seg_all = geodesic_m(la1, lo1, la2, lo2)
+            # candidate edges: consecutive cuts of one way; k numbers them
+            # per way, min-length drops included
+            cut = np.flatnonzero(ct)
+            way = np.searchsorted(ends, cut, side="right")
+            same = way[1:] == way[:-1]
+            s, e, way = cut[:-1][same], cut[1:][same], way[:-1][same]
+            first = np.flatnonzero(np.r_[True, way[1:] != way[:-1]])
+            k = np.arange(way.shape[0]) - np.repeat(first, np.diff(np.r_[first, way.shape[0]]))
+            length = np.array([np.add.reduce(seg_all[a:b]) for a, b in zip(s, e)])
+            keep = ~(length < min_len)
+            if not keep.any():
                 continue
-            # pass 2 (whole batch, vectorized): ids in three kernel calls
-            fids = node_ids(np.asarray(f_lat), np.asarray(f_lon), precision, hash_length)
-            tids = node_ids(np.asarray(t_lat), np.asarray(t_lon), precision, hash_length)
-            eids = edge_ids(
-                fids, tids, np.asarray(wids, dtype=np.int64),
-                np.asarray(ks, dtype=np.int64), hash_length,
-            )
+            s, e, way, k, length = s[keep], e[keep], way[keep], k[keep], length[keep]
+            src = rows[way]  # input row of each edge
+            wids = batch.column("way_id").to_numpy(zero_copy_only=False)[src]
+            fids = node_ids(la[s], lo[s], precision, hash_length)
+            tids = node_ids(la[e], lo[e], precision, hash_length)
+            eids = edge_ids(fids, tids, wids, k, hash_length)
+            # edge vertices [s, e] inclusive, gathered flat
+            n_v = e - s + 1
+            out_offs = np.concatenate([[0], np.cumsum(n_v)])
+            idx = np.arange(out_offs[-1]) - np.repeat(out_offs[:-1] - s, n_v)
+            e_la, e_lo = la[idx], lo[idx]
             # covering fused into the split kernel: the Catalyst HOF variant
             # (tiles.edge_covering_col, kept for the SQL-checked query) is
             # interpreted per row and measured as the dominant pipeline tail
             # at 1M edges — this is one vectorized pass over the same arrays
-            from ..functions.tiling import H3_RES_TO_LEVEL, polyline_coverings
-
-            coverings = polyline_coverings(
-                seg_lats, seg_lons, H3_RES_TO_LEVEL[COVERING_H3_RES]
-            )
-            yield pd.DataFrame(
-                {
-                    "id": fids_str(eids),
-                    "from_node_id": fids_str(fids),
-                    "to_node_id": fids_str(tids),
-                    "length_m": lengths,
-                    "lats": seg_lats,
-                    "lons": seg_lons,
-                    "name": [m[0] for m in meta],
-                    "type": [m[1] for m in meta],
-                    "width_raw": [m[2] for m in meta],
-                    "width_m": [
-                        None if m[3] is None or pd.isna(m[3]) else float(m[3]) for m in meta
-                    ],
-                    "width_source": [m[4] for m in meta],
-                    "original_way_id": wids,
-                    "covering": coverings,
-                }
+            cells, cell_offs = polyline_coverings(e_la, e_lo, out_offs, level)
+            take = pa.array(src)
+            # from_pandas: a NaN length or width leaves as null
+            width_m = batch.column("width_m").take(take).to_numpy(zero_copy_only=False)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(eids), pa.array(fids), pa.array(tids),
+                    pa.array(length, from_pandas=True),
+                    list_array(e_la, out_offs), list_array(e_lo, out_offs),
+                    batch.column("name").take(take), batch.column("type").take(take),
+                    batch.column("width_raw").take(take),
+                    pa.array(width_m, from_pandas=True),
+                    batch.column("width_source").take(take), pa.array(wids),
+                    list_array(cells, cell_offs),
+                ],
+                names=EDGES_COLUMNS,
             )
 
-    return regrouped.mapInPandas(kernel, schema=EDGES_SCHEMA)
+    return regrouped.mapInArrow(kernel, schema=EDGES_SCHEMA)
 
 
 def build_nodes(snap: DataFrame, config: EngineConfig) -> DataFrame:

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -534,42 +535,46 @@ def insert_intersections(
     # table whose coordinate-array payload the SMJ would otherwise sort
     # (guide §3.1; interleaved A/B at 100k docs: the sort-free plan wins
     # and the ordering of the heavy rows buys nothing downstream).
-    enriched = ways.join(cand.hint("shuffle_hash"), "way_id", "left")
+    enriched = ways.join(cand.hint("shuffle_hash"), "way_id", "left").select(
+        "way_id", "lats", "lons", "tags",
+        F.col("cand_pts.plat").alias("cand_lat"),
+        F.col("cand_pts.plon").alias("cand_lon"),
+    )
+
+    from ..functions.arrow_lists import list_array, list_flat
 
     def kernel(batches):
         # ways WITHOUT candidate points (the vast majority — candidates are
-        # bounded by real crossings) pass through as a column slice with no
-        # per-way Python at all; only candidate-carrying ways run the
+        # bounded by real crossings) pass through as one batch filter with
+        # no per-way Python at all; only candidate-carrying ways run the
         # insertion loop. Row order within the stage changes (pass-through
         # block first per batch) — consumed only by joins/aggregations.
-        for pdf in batches:
-            cand_col = pdf["cand_pts"]
-            mask = np.fromiter(
-                (c is not None and len(c) > 0 for c in cand_col),
-                dtype=bool,
-                count=len(pdf),
-            )
+        for batch in batches:
+            cla, coffs = list_flat(batch.column("cand_lat"))
+            clo, _ = list_flat(batch.column("cand_lon"))
+            mask = np.diff(coffs) > 0
+            geoms = batch.select(["way_id", "lats", "lons", "tags"])
             if not mask.all():
-                yield pdf.loc[~mask, ["way_id", "lats", "lons", "tags"]]
+                yield geoms.filter(pa.array(~mask))
             if not mask.any():
                 continue
-            sub = pdf.loc[mask]
-            out = {"way_id": [], "lats": [], "lons": [], "tags": []}
-            for way_id, lats, lons, tags, cand_pts in zip(
-                sub["way_id"], sub["lats"], sub["lons"], sub["tags"], sub["cand_pts"]
-            ):
-                la = np.asarray(lats, dtype=np.float64)
-                lo = np.asarray(lons, dtype=np.float64)
-                coords = np.stack([la, lo], axis=1)
-                pts = np.array(
-                    [[p["plat"], p["plon"]] for p in cand_pts], dtype=np.float64
+            sub = geoms.filter(pa.array(mask))
+            la, offs = list_flat(sub.column("lats"))
+            lo, _ = list_flat(sub.column("lons"))
+            pts = np.stack([cla, clo], axis=1)
+            cidx = np.flatnonzero(mask)
+            new = [
+                insert_points_on_line(
+                    np.stack([la[s:e], lo[s:e]], axis=1), pts[c0:c1], tol_deg, precision
                 )
-                new = insert_points_on_line(coords, pts, tol_deg, precision)
-                la, lo = new[:, 0], new[:, 1]
-                out["way_id"].append(way_id)
-                out["lats"].append(la)
-                out["lons"].append(lo)
-                out["tags"].append(tags)
-            yield pd.DataFrame(out)
+                for s, e, c0, c1 in zip(offs[:-1], offs[1:], coffs[cidx], coffs[cidx + 1])
+            ]
+            out_offs = np.concatenate([[0], np.cumsum([c.shape[0] for c in new])])
+            flat = np.concatenate(new)
+            yield pa.RecordBatch.from_arrays(
+                [sub.column("way_id"), list_array(flat[:, 0].copy(), out_offs),
+                 list_array(flat[:, 1].copy(), out_offs), sub.column("tags")],
+                names=["way_id", "lats", "lons", "tags"],
+            )
 
-    return enriched.mapInPandas(kernel, schema=WAYS_SCHEMA)
+    return enriched.mapInArrow(kernel, schema=WAYS_SCHEMA)

@@ -18,10 +18,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "media_id string, kind string, payload binary, "
-    "width int, height int, sample_rate int, n_frames int"
-)
 FEATURE_SCHEMA = "media_id string, kind string, feature array<float>, feat_dim int"
 THUMB_SCHEMA = "media_id string, thumb binary, thumb_w int, thumb_h int"
 

@@ -17,9 +17,9 @@ from ..functions.tiling import H3_RES_TO_LEVEL, LEVEL_SHIFT, X_SHIFT, XY_MASK, c
 
 
 # Per-edge covering resolution — the single source of truth. build_edges'
-# fused NumPy kernel (operators.edges) and the Catalyst fallback below must
-# agree, or pipelines would silently ship coverings at mixed resolutions
-# (pipeline.py skips with_edge_covering whenever a 'covering' column exists).
+# fused NumPy kernel (operators.edges, the pipeline path) and the Catalyst
+# with_edge_covering below (the SQL-checked query path) must agree, or the
+# two would ship coverings at different resolutions.
 COVERING_H3_RES = 8
 
 

@@ -32,7 +32,7 @@ from ..config import EngineConfig
 
 
 def _with_lineage_sidecar(df: DataFrame, lineage_dir: str, run_id: str) -> DataFrame:
-    """Pass-through mapInPandas that records per-partition lineage on exit."""
+    """Pass-through mapInArrow that records per-partition lineage on exit."""
     os.makedirs(lineage_dir, exist_ok=True)
 
     def passthrough(batches):
@@ -40,9 +40,9 @@ def _with_lineage_sidecar(df: DataFrame, lineage_dir: str, run_id: str) -> DataF
 
         t0 = time.time()
         rows = 0
-        for pdf in batches:
-            rows += len(pdf)
-            yield pdf
+        for batch in batches:
+            rows += batch.num_rows
+            yield batch
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else -1
         attempt = ctx.taskAttemptId() if ctx is not None else 0
@@ -60,7 +60,7 @@ def _with_lineage_sidecar(df: DataFrame, lineage_dir: str, run_id: str) -> DataF
             json.dump(rec, f)
         os.replace(tmp, final)
 
-    return df.mapInPandas(passthrough, schema=df.schema)
+    return df.mapInArrow(passthrough, schema=df.schema)
 
 
 def _pending_filter(
@@ -91,18 +91,25 @@ class Checkpointer:
     def _stage_dir(self, stage: str, config: EngineConfig) -> str:
         return os.path.join(self.root, f"{stage}_{config.step_param_hash(stage)}")
 
-    def is_complete(self, stage: str, config: EngineConfig) -> bool:
-        """True iff a resumable run would skip this stage (committed data
-        present). Lets the pipeline avoid eager side-work (e.g. the covered
-        scratch materialization) whose consumer stage will be resumed."""
+    def is_complete(self, stage: str, config: EngineConfig, partitioned: bool = False) -> bool:
+        """True iff a resumable run would skip this whole stage: committed
+        data (``data/_SUCCESS``) for ``materialize``, the ``_STAGE_DONE``
+        flag for ``materialize_partitioned``. Lets the pipeline skip building
+        a resumed stage and any eager side-work (e.g. the covered scratch
+        materialization) whose consumer stage will be resumed."""
+        flag = "_STAGE_DONE" if partitioned else os.path.join("data", "_SUCCESS")
         return self.resume and os.path.exists(
-            os.path.join(self._stage_dir(stage, config), "data", "_SUCCESS")
+            os.path.join(self._stage_dir(stage, config), flag)
         )
 
-    def materialize(self, stage: str, config: EngineConfig, df: DataFrame) -> DataFrame:
+    def materialize(
+        self, stage: str, config: EngineConfig, df: Optional[DataFrame]
+    ) -> DataFrame:
+        """Write ``df`` as the stage's data, or read it back when the stage
+        is complete (``df`` may then be None)."""
         sdir = self._stage_dir(stage, config)
         data_dir = os.path.join(sdir, "data")
-        if self.resume and os.path.exists(os.path.join(data_dir, "_SUCCESS")):
+        if self.is_complete(stage, config):
             self.events.append({"stage": stage, "action": "resumed"})
             return self.spark.read.parquet(data_dir)
         run_id = uuid.uuid4().hex[:12]
@@ -141,11 +148,12 @@ class Checkpointer:
         self,
         stage: str,
         config: EngineConfig,
-        df: DataFrame,
+        df: Optional[DataFrame],
         partition_col: str,
         sink=None,
     ) -> DataFrame:
-        """Tile-partition-level resume.
+        """Tile-partition-level resume (``df`` may be None when the stage is
+        complete).
 
         A partition value counts as done iff (a) a committed-partition
         sidecar records it AND (b) its ``<col>=<val>`` directory still
@@ -169,7 +177,7 @@ class Checkpointer:
         if sink is None:
             sink = ParquetTableSink(data_dir)
         done_flag = os.path.join(sdir, "_STAGE_DONE")
-        if self.resume and os.path.exists(done_flag):
+        if self.is_complete(stage, config, partitioned=True):
             self.events.append({"stage": stage, "action": "resumed"})
             return sink.read(self.spark)
 

@@ -28,12 +28,7 @@ from ..config import EngineConfig
 from ..operators.cluster import snap_map
 from ..operators.edges import build_edges, build_nodes, clustering_domain_fast
 from ..operators.geometry_ops import detect_intersections, insert_intersections
-from ..operators.tiles import (
-    channel_density_rollup,
-    with_edge_cells,
-    with_edge_covering,
-    with_node_cells,
-)
+from ..operators.tiles import channel_density_rollup, with_edge_cells, with_node_cells
 
 
 def _parquet_max_abs(path: Optional[str], col: str, max_files: int = 256) -> Optional[float]:
@@ -91,7 +86,9 @@ class WaterwayEngine:
         durable: bool = True,
         partition_col: Optional[str] = None,
     ) -> DataFrame:
-        """End a pipeline stage: build its DataFrame and materialize it.
+        """End a pipeline stage: build its DataFrame and materialize it —
+        or, when the durable Checkpointer will resume the whole stage, read
+        it back without building it.
 
         Every Spark job ``build`` and the materialization submit — eager
         operator work such as snap_map's checkpoints included — runs under
@@ -115,9 +112,14 @@ class WaterwayEngine:
         prev_desc = sc.getLocalProperty("spark.job.description")
         sc.setLocalProperty("spark.job.description", f"stage-{name}")
         try:
-            df = build()
             if self.checkpointer is not None and durable:
                 path = os.path.join(self.checkpointer._stage_dir(name, self.config), "data")
+                # a stage the Checkpointer resumes whole is never built: its
+                # eager work (snap_map's checkpoints and probes) would be wasted
+                resumed = self.checkpointer.is_complete(
+                    name, self.config, partitioned=partition_col is not None
+                )
+                df = None if resumed else build()
                 if partition_col is None:
                     out = self.checkpointer.materialize(name, self.config, df)
                 else:
@@ -125,6 +127,7 @@ class WaterwayEngine:
                         name, self.config, df, partition_col
                     )
             else:
+                df = build()
                 path = os.path.join(self._scratch_dir(), name)
                 # 8 MiB row groups: parquet scans split at row-group
                 # granularity, and a stage written from a 16-partition shuffle
@@ -274,10 +277,8 @@ class WaterwayEngine:
             return with_node_cells(nodes, cfg)
 
         def edges_tiled() -> DataFrame:
-            # build_edges emits `covering` from the fused NumPy kernel; the
-            # Catalyst with_edge_covering expr is only applied if absent
-            out = with_edge_cells(edges, cfg)
-            return out if "covering" in out.columns else with_edge_covering(out, cfg)
+            # build_edges emits `covering` from its fused NumPy kernel
+            return with_edge_cells(edges, cfg)
 
         if self.checkpointer is None:
             nodes_t, edges_t = nodes_tiled(), edges_tiled()
@@ -312,11 +313,13 @@ def spark_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # large Arrow batches amortize the per-batch Python costs of the
-        # mapInPandas kernels (parse joins each batch's span texts into one
+        # mapInArrow kernels (parse joins each batch's span texts into one
         # ndjson blob — 4096-row batches meant ~2.8k blob+reader setups per
         # 100k docs); the BYTES cap (Spark 4.x) bounds worst-case batches on
         # tables whose rows are 20k-vertex mega-way arrays, which is what the
-        # old conservative 4096-row cap was protecting against
+        # old conservative 4096-row cap was protecting against. Batch size
+        # never changes a result: the sorted-run kernels re-cut their input
+        # to whole ways/blocks (functions.arrow_lists.whole_runs)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         .config("spark.sql.execution.arrow.maxBytesPerBatch", str(64 * 1024 * 1024))
         .config("spark.scheduler.mode", "FAIR")

@@ -31,7 +31,6 @@ from dataclasses import dataclass
 
 import numpy as np
 
-SPAN_SCHEMA_DDL = "kind string, text string, media_ref string, offset int"
 DOC_SCHEMA_DDL = (
     "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 )

@@ -18,15 +18,12 @@ The docs table itself is never mutated: the per-row span-sequence invariant
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import EngineConfig
 from ..functions.geodesy import round_coords
 
-NODE_JSON_SCHEMA = "id bigint, lat double, lon double"
-WAY_JSON_SCHEMA = "id bigint, refs array<bigint>, tags map<string,string>"
 RELATION_JSON_SCHEMA = (
     "id bigint, members array<struct<type:string,ref:bigint,role:string>>, "
     "tags map<string,string>"
@@ -60,15 +57,53 @@ OSM_PARSED_SCHEMA = (
 )
 
 
+def _ndjson(texts) -> "pa.Buffer":
+    """Span texts → one newline-delimited JSON blob, joined Arrow-side."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    one_list = pa.ListArray.from_arrays(pa.array([0, len(texts)], pa.int32()), texts)
+    return pc.binary_join(one_list, "\n")[0].as_buffer()
+
+
+def _tags_map(tbl):
+    """The reader's inferred tags struct (one field per observed key) →
+    ``map<string,string>``: the non-null (row, field) pairs in row-major
+    order, keys and items gathered with ``take``. A way without tags gets
+    an empty map."""
+    import numpy as np
+    import pyarrow as pa
+
+    n = tbl.num_rows
+    if "tags" in tbl.schema.names and pa.types.is_struct(tbl.schema.field("tags").type):
+        sc = tbl.column("tags").chunk(0)
+        names = [f.name for f in sc.type]
+        # a key seen only with null values is inferred as the null type
+        children = [sc.field(i).cast(pa.string()) for i in range(len(names))]
+    else:
+        names, children = [], []
+    valid = np.zeros((n, len(names)), dtype=bool)
+    for j, child in enumerate(children):
+        valid[:, j] = child.is_valid().to_numpy(zero_copy_only=False)
+    rows, fields = np.nonzero(valid)
+    offsets = np.concatenate([[0], np.cumsum(valid.sum(axis=1))]).astype(np.int32)
+    keys = pa.array(names, pa.string()).take(fields)
+    items = (
+        pa.concat_arrays(children).take(fields * n + rows)
+        if children
+        else pa.array([], pa.string())
+    )
+    return pa.MapArray.from_arrays(offsets, keys, items)
+
+
 def _osm_parse_kernel(precision: int):
     """ONE Arrow C++ ndjson pass for BOTH node and way payloads (union
     schema) — replaces the round-1 design of two full span scans (one
     Arrow-kernel scan for nodes + one Jackson from_json scan for ways).
-    Node coordinates get Python-round-exact rounding in the same pass."""
-    import io
-
-    import numpy as np
+    Node coordinates get Python-round-exact rounding in the same pass.
+    Batches in, batches out: the reader's columns leave as they are read."""
     import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.json as pajson
 
     node_schema = pa.schema(
@@ -77,7 +112,7 @@ def _osm_parse_kernel(precision: int):
     node_popts = pajson.ParseOptions(explicit_schema=node_schema)
     way_schema = pa.schema([("id", pa.int64()), ("refs", pa.list_(pa.int64()))])
     # tags keys are open-ended (real OSM) → let Arrow infer the per-batch
-    # struct of observed keys, converted to dicts (null fields dropped)
+    # struct of observed keys, converted to a map column (null fields dropped)
     way_popts = pajson.ParseOptions(
         explicit_schema=way_schema, unexpected_field_behavior="infer"
     )
@@ -86,76 +121,47 @@ def _osm_parse_kernel(precision: int):
     # the machine quadratically and destroys core-count scaling (measured:
     # parse anti-scaled 7× from 8→32 tasks with the default).
     ropts = pajson.ReadOptions(use_threads=False)
+    i64, f64 = pa.int64(), pa.float64()
+    refs_t, tags_t = pa.list_(i64), pa.map_(pa.string(), pa.string())
+    out_schema = pa.schema(
+        [("kind", pa.string()), ("node_id", i64), ("lat", f64), ("lon", f64),
+         ("way_id", i64), ("refs", refs_t), ("tags", tags_t)]
+    )
 
-    def _null_i64(n):
-        return pd.Series(np.full(n, np.nan)).astype("Int64")
+    def read(batch, kind, popts):
+        """The batch's ``kind`` spans as one parsed table, or None."""
+        texts = batch.column("text").filter(pc.equal(batch.column("kind"), kind))
+        if len(texts):
+            tbl = pajson.read_json(
+                pa.BufferReader(_ndjson(texts)), read_options=ropts, parse_options=popts
+            )
+            if tbl.num_rows:
+                return tbl.combine_chunks()
+        return None
+
+    def coord(tbl, name):
+        # from_pandas: a missing coordinate (NaN after to_numpy) stays null
+        x = tbl.column(name).to_numpy()
+        return pa.array(round_coords(x, precision), from_pandas=True)
 
     def kernel(batches):
-        # node and way frames are yielded SEPARATELY (mapInPandas accepts
-        # any number of frames per input batch; row order is unchanged —
-        # nodes then ways, as the old concatenated frame emitted them):
-        # pd.concat on frames with mostly-None object columns scanned every
-        # element through is_valid_na_for_dtype — ~60% of this kernel's
-        # profiled Python wall at 100k docs (guide §4.2).
-        for pdf in batches:
-            kinds = pdf["kind"].to_numpy()
-            texts = pdf["text"]
-            nmask = kinds == "osm_node"
-            if nmask.any():
-                blob = ("\n".join(texts[nmask])).encode("utf-8")
-                tbl = pajson.read_json(
-                    io.BytesIO(blob), read_options=ropts, parse_options=node_popts
+        # node and way batches are yielded SEPARATELY, nodes first
+        for batch in batches:
+            if (tbl := read(batch, "osm_node", node_popts)) is not None:
+                n = tbl.num_rows
+                yield pa.RecordBatch.from_arrays(
+                    [pa.repeat("osm_node", n), tbl.column("id").chunk(0),
+                     coord(tbl, "lat"), coord(tbl, "lon"), pa.nulls(n, i64),
+                     pa.nulls(n, refs_t), pa.nulls(n, tags_t)],
+                    schema=out_schema,
                 )
-                n = len(tbl)
-                yield pd.DataFrame(
-                    {
-                        "kind": np.repeat("osm_node", n),
-                        "node_id": tbl.column("id").to_numpy(),
-                        "lat": round_coords(tbl.column("lat").to_numpy(), precision),
-                        "lon": round_coords(tbl.column("lon").to_numpy(), precision),
-                        "way_id": _null_i64(n),
-                        "refs": pd.Series([None] * n, dtype=object),
-                        "tags": pd.Series([None] * n, dtype=object),
-                    }
-                )
-            wmask = kinds == "osm_way"
-            if wmask.any():
-                blob = ("\n".join(texts[wmask])).encode("utf-8")
-                tbl = pajson.read_json(
-                    io.BytesIO(blob), read_options=ropts, parse_options=way_popts
-                )
-                n = len(tbl)
-                if "tags" in tbl.schema.names:
-                    sc = tbl.column("tags").combine_chunks()
-                    fields = [f.name for f in sc.type]
-                    cols = {f: sc.field(f).to_pylist() for f in fields}
-                    tag_dicts = [
-                        {k: cols[k][i] for k in fields if cols[k][i] is not None}
-                        for i in range(n)
-                    ]
-                else:
-                    tag_dicts = [{} for _ in range(n)]
-                # refs as int64 views over the Arrow values buffer instead
-                # of to_pylist(): no per-ref Python int boxing. Null ref
-                # lists (a way span without a refs field) keep the slow
-                # path so None survives as None.
-                rcol = tbl.column("refs").combine_chunks()
-                if rcol.null_count:
-                    refs_arrays = rcol.to_pylist()
-                else:
-                    rvals = rcol.flatten().to_numpy(zero_copy_only=False)
-                    roffs = rcol.offsets.to_numpy()
-                    refs_arrays = np.split(rvals, (roffs[1:-1] - roffs[0]))
-                yield pd.DataFrame(
-                    {
-                        "kind": np.repeat("osm_way", n),
-                        "node_id": _null_i64(n),
-                        "lat": np.full(n, np.nan),
-                        "lon": np.full(n, np.nan),
-                        "way_id": tbl.column("id").to_numpy(),
-                        "refs": pd.Series(refs_arrays, dtype=object),
-                        "tags": pd.Series(tag_dicts, dtype=object),
-                    }
+            if (tbl := read(batch, "osm_way", way_popts)) is not None:
+                n = tbl.num_rows
+                yield pa.RecordBatch.from_arrays(
+                    [pa.repeat("osm_way", n), pa.nulls(n, i64), pa.nulls(n, f64),
+                     pa.nulls(n, f64), tbl.column("id").chunk(0),
+                     tbl.column("refs").chunk(0), _tags_map(tbl)],
+                    schema=out_schema,
                 )
 
     return kernel
@@ -169,7 +175,7 @@ def parse_osm(docs: DataFrame, config: EngineConfig) -> DataFrame:
     spans = explode_spans(docs).where(
         F.col("kind").isin("osm_node", "osm_way")
     ).select("kind", "text")
-    return spans.mapInPandas(
+    return spans.mapInArrow(
         _osm_parse_kernel(config.coordinate_precision), schema=OSM_PARSED_SCHEMA
     )
 

@@ -77,8 +77,12 @@ def test_polyline_coverings_kernel_matches_catalyst_expr(spark):
         r["id"]: list(r["covering"])
         for r in with_edge_covering(df, EngineConfig()).collect()
     }
-    got = polyline_coverings(
-        [np.array(e[1]) for e in edges], [np.array(e[2]) for e in edges], level
+    offsets = np.cumsum([0] + [len(e[1]) for e in edges])
+    cells, cell_offs = polyline_coverings(
+        np.concatenate([e[1] for e in edges]),
+        np.concatenate([e[2] for e in edges]),
+        offsets,
+        level,
     )
-    for (eid, _la, _lo), cells in zip(edges, got):
-        assert cells.tolist() == want[eid], eid
+    for i, (eid, _la, _lo) in enumerate(edges):
+        assert cells[cell_offs[i] : cell_offs[i + 1]].tolist() == want[eid], eid

@@ -75,3 +75,25 @@ def test_type_filter_change_recomputes_simplified(spark, tmp_path):
     assert _ids(g2.nodes) == _ids(fresh.nodes)
     # the fixture holds canals, so the rerun must not be the first graph
     assert _ids(g2.edges) != _ids(g1.edges)
+
+
+def test_resumed_stages_are_not_built(spark, tmp_path, monkeypatch):
+    """A rerun on a complete root resumes every stage without building it:
+    snap_map's eager jobs (hot-block checkpoint, mapping checkpoint,
+    violation probe) must not run for a resumed clustering stage."""
+    import osmwaterwayextractor_spark.plans.pipeline as pipeline
+
+    docs = _docs_df(spark, DOCS)
+    root = str(tmp_path / "ckpt")
+    cfg = EngineConfig()
+    g1 = WaterwayEngine(cfg, checkpointer=Checkpointer(spark, root)).build_graph(docs, spark)
+    want = (_ids(g1.edges), _ids(g1.nodes))
+
+    def snap_map(*args, **kwargs):
+        raise AssertionError("snap_map built for a resumed stage")
+
+    monkeypatch.setattr(pipeline, "snap_map", snap_map)
+    ck = Checkpointer(spark, root)
+    g2 = WaterwayEngine(cfg, checkpointer=ck).build_graph(docs, spark)
+    assert ck.events and {e["action"] for e in ck.events} == {"resumed"}
+    assert (_ids(g2.edges), _ids(g2.nodes)) == want
